@@ -387,11 +387,11 @@ def lm_score_bigram(
     # identity — so the old separate `big.groupBy("__w1")` aggregation
     # re-evaluated the corpus-sized tokenize+zip_with+explode lineage a
     # THIRD time (profiled at sf0.1 as one of three ~0.45 s serial
-    # stages) for a table derivable from pair_counts alone.  The window
-    # needs a (vocab-sized) exchange on __w1, but the old join of
-    # pair_counts [hash(__w1,__w2)] with ctx_counts [hash(__w1)] paid
-    # that same exchange anyway — net: one full corpus pass and its
-    # map-side aggregation removed, zero new exchanges (guide §2.3/2.4).
+    # stages) for a table derivable from pair_counts alone.  The window's
+    # hash(__w1) exchange carries the distinct-bigram pair table, in place
+    # of the old plan's smaller partial-count exchange plus its broadcast
+    # join of ctx_counts: a different exchange, but one full corpus pass
+    # and its map-side aggregation are removed (guide §2.3/2.4).
     pair_counts = big.groupBy("__w1", "__w2").agg(
         F.count("*").alias("__pc")
     )
@@ -720,9 +720,13 @@ def repetition_signals(
     par = df.sparkSession.sparkContext.defaultParallelism
     tok = tok.repartition(par, "__id")
     w = Window.partitionBy("__id").orderBy("__pos")
-    for j in range(1, max_lead + 1):
-        tok = tok.withColumn(f"__h{j}", F.lead("__h0", j).over(w))
-        tok = tok.withColumn(f"__l{j}", F.lead("__l0", j).over(w))
+    # One projection: chained withColumn calls re-analysed the growing
+    # window plan once per lead column.  Same plan either way — one Window
+    # node over the repartition's clustering.
+    tok = tok.withColumns({
+        f"__{c}{j}": F.lead(f"__{c}0", j).over(w)
+        for j in range(1, max_lead + 1) for c in "hl"
+    })
     # one stack row per n-gram size; NULL lead at the tail => NULL glen
     # (integer + NULL), filtered below.  NOTE: xxhash64 skips NULL args
     # rather than returning NULL, so the glen-NULL filter is what keeps

@@ -9,6 +9,26 @@ verification and the filename variant (elusion.rs:6765-7778).
 Spark-first: every loader returns a *lazy* DataFrame with normalized
 column names; nothing is collected to the driver except the 100-row CSV
 type-inference sample (the same sample size the reference uses).
+
+Inferred schemas of local files are remembered (``_INFERRED``, a bounded
+LRU), as DataFusion's ListingTable caches per-file metadata: inference is
+a Spark job per call (the parquet footer read, CSV's header + 100-row
+sample, JSON's full-file scan), while a read with a known schema launches
+none.  ``load_parquet``, ``load_csv`` and ``load_json`` store Spark's own
+inferred ``StructType`` (for CSV the raw all-string schema plus the
+per-column type vote) under a key of the loader kind, the absolute path,
+the file's ``(st_size, st_mtime_ns, st_ino)``, the reader options that
+change inference and the session confs that do (``_INFERENCE_CONFS``).
+A rewritten file therefore misses.  Nothing is cached for paths that
+cannot be ``stat``-ed (remote URIs, globs), for directories, for
+TIMESTAMP(NANOS) parquet files, or for a file modified less than
+``_RACY_NS`` before the lookup — git's "racy-git" rule: a same-size
+rewrite within the filesystem's timestamp granularity keeps its mtime,
+so only a file whose mtime is older than any such granularity is safe to
+key on.  ``cache.clear_cache()`` does not touch this cache: it drops
+query *results*, this holds file *metadata* that a change of the file
+itself invalidates (Spark's ``catalog.clearCache()`` likewise leaves file
+listings alone).
 """
 
 from __future__ import annotations
@@ -17,6 +37,10 @@ import glob as _glob
 import json as _json
 import os
 import re
+import stat as _stat
+import threading
+import time
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +64,61 @@ def _wrap(df: DataFrame, alias: str):
     from ..dataframe import CustomDataFrame
 
     return CustomDataFrame(N.normalize_columns(df), alias)
+
+
+# ------------------------------------------------------- inference cache
+
+_INFERRED: OrderedDict = OrderedDict()   # key -> inferred schema, LRU order
+_INFERRED_MAX = 256
+_INFERRED_LOCK = threading.Lock()
+# A file modified this recently may still be rewritten within its
+# filesystem's timestamp granularity (2 s on FAT) with the same size and
+# mtime, so it is never keyed on.
+_RACY_NS = 2_000_000_000
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _inference_key(s: SparkSession, kind: str, path: str, *options):
+    """The inference-cache key of ``path``, or None when nothing may be
+    cached for it (see the module docstring).  Only absolute paths are
+    keyed: Spark resolves a relative one against the JVM's working
+    directory, which need not be this process's."""
+    if not os.path.isabs(path):
+        return None
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not _stat.S_ISREG(st.st_mode) or (
+            time.time_ns() - st.st_mtime_ns < _RACY_NS):
+        return None
+    confs = tuple(s.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return (kind, path, st.st_size, st.st_mtime_ns, st.st_ino, options, confs)
+
+
+def _recall(key):
+    if key is None:
+        return None
+    with _INFERRED_LOCK:
+        value = _INFERRED.get(key)
+        if value is not None:
+            _INFERRED.move_to_end(key)
+        return value
+
+
+def _remember(key, value) -> None:
+    if key is None:
+        return
+    with _INFERRED_LOCK:
+        _INFERRED[key] = value
+        _INFERRED.move_to_end(key)
+        while len(_INFERRED) > _INFERRED_MAX:
+            _INFERRED.popitem(last=False)
 
 
 # ------------------------------------------------------------------ dispatch
@@ -77,8 +156,14 @@ def load_parquet(path: str, alias: str, spark: SparkSession | None = None):
     are handled by reading nanos as long and rebuilding the timestamp at
     microsecond precision — still a distributed scan, no driver detour.
     The footer is sniffed with pyarrow up front (metadata-only, driver
-    side) so the common no-nanos case never pays a failed Spark job."""
+    side) so the common no-nanos case never pays a failed Spark job.
+    A local file's schema is remembered (module docstring), so a repeat
+    load of an unchanged file skips the sniff and the footer job."""
     s = _spark(spark)
+    key = _inference_key(s, "parquet", path)
+    cached = _recall(key)
+    if cached is not None:
+        return _wrap(s.read.schema(cached).parquet(path), alias)
     nano_cols: list[str] | None = None
     try:
         import pyarrow.dataset as pads
@@ -93,7 +178,7 @@ def load_parquet(path: str, alias: str, spark: SparkSession | None = None):
     if nano_cols is None:
         try:
             df = s.read.parquet(path)
-            df.schema  # force footer read so nanos files fail here
+            _remember(key, df.schema)  # forces the footer read: nanos fail here
             return _wrap(df, alias)
         except Exception as e:
             if "NANOS" not in str(e):
@@ -106,7 +191,9 @@ def load_parquet(path: str, alias: str, spark: SparkSession | None = None):
                 if str(f.type).startswith("timestamp[ns")
             ]
     if not nano_cols:
-        return _wrap(s.read.parquet(path), alias)
+        df = s.read.parquet(path)
+        _remember(key, df.schema)
+        return _wrap(df, alias)
     prev = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
@@ -151,7 +238,10 @@ def load_csv(path: str, alias: str, spark: SparkSession | None = None,
     EU decimals, thousands separators, %, currency, multilingual booleans),
     then apply one vectorized cast/cleanup projection (csv.rs:293-317).
     The cleanup runs as built-in Spark expressions — JVM-side, codegen'd —
-    so the same pass scales to a 100 TB folder of CSVs."""
+    so the same pass scales to a 100 TB folder of CSVs.  A local file's
+    raw schema and type vote are remembered (module docstring), so a
+    repeat load of an unchanged file reads with them and launches no
+    job."""
     s = _spark(spark)
     sep = delimiter or sniff_delimiter(path)
     reader = (
@@ -164,14 +254,24 @@ def load_csv(path: str, alias: str, spark: SparkSession | None = None,
     if schema is not None:
         df = reader.schema(schema).csv(path)
         return _wrap(df, alias)
-    df = N.normalize_columns(reader.csv(path))  # all columns arrive as string
+    key = _inference_key(s, "csv", path, sep, infer)
+    cached = _recall(key)
+    if cached is not None:
+        raw_schema, votes = cached
+        df = N.normalize_columns(reader.schema(raw_schema).csv(path))
+    else:
+        raw = reader.csv(path)  # all columns arrive as string
+        df = N.normalize_columns(raw)
+        votes = None
+        if infer:
+            sample = df.limit(100).collect()  # same 100-row sample as csv.rs:168-205
+            votes = {c: classify_column([row[c] for row in sample])
+                     for c in df.columns}
+        _remember(key, (raw.schema, votes))
     if not infer:
         return _wrap(df, alias)
-    sample = df.limit(100).collect()  # same 100-row sample as csv.rs:168-205
     updates = {}
-    for c in df.columns:
-        values = [row[c] for row in sample]
-        inferred = classify_column(values)
+    for c, inferred in votes.items():
         expr = cast_expression(c, inferred)
         if expr is not None:
             updates[c] = expr
@@ -221,7 +321,9 @@ def load_json(path: str, alias: str, spark: SparkSession | None = None):
     promotes every non-(int/float/string) value — arrays, objects — to a
     *string* (infer_schema_json.rs:50-51); we read natively then stringify
     nested fields with ``to_json`` so the observable schema matches while
-    the parse itself stays distributed."""
+    the parse itself stays distributed.  A local file's inferred schema
+    is remembered (module docstring), so a repeat load of an unchanged
+    file skips the inference scan."""
     s = _spark(spark)
     with open(path, "r", encoding="utf-8", errors="replace") as f:
         head = ""
@@ -231,7 +333,14 @@ def load_json(path: str, alias: str, spark: SparkSession | None = None):
                 head = ch
                 break
     multiline = head == "["
-    df = s.read.option("multiLine", multiline).json(path)
+    key = _inference_key(s, "json", path, multiline)
+    cached = _recall(key)
+    reader = s.read.option("multiLine", multiline)
+    if cached is not None:
+        df = reader.schema(cached).json(path)
+    else:
+        df = reader.json(path)
+        _remember(key, df.schema)
     for f_ in df.schema.fields:
         if isinstance(f_.dataType, (T.ArrayType, T.StructType, T.MapType)):
             df = df.withColumn(f_.name, F.to_json(F.col(f_.name)))

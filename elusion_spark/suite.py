@@ -37,6 +37,25 @@ def _t(spark: SparkSession, sf_dir: str, table: str, alias: str | None = None) -
     return load_parquet(f"{sf_dir}/{table}.parquet", alias or table, spark)
 
 
+def _import_tokenizer_doc(doc: dict, query: str) -> dict:
+    """Import ``doc`` through a temporary ``tokenizer.json``, the way a
+    published file is imported.  The import reads the file eagerly, so the
+    file is removed before this returns."""
+    import json
+    import os
+    import tempfile
+
+    from .operators.tokenizer_io import import_hf_tokenizer_json
+
+    fd, path = tempfile.mkstemp(suffix=".json", prefix=f"{query}_tok_")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(doc, f)
+        return import_hf_tokenizer_json(path)
+    finally:
+        os.remove(path)
+
+
 def q(name: str, oracle: str | None = None):
     def deco(fn):
         QUERIES[name] = fn
@@ -6946,12 +6965,7 @@ def q160(spark, sf):
     hash proves the pre-tokenizer ran inside the encode, not beside
     it.  Oracle: per-word '▁'||w then the q140 chained-replace replay
     (bpe_segment_word ≡ rank-order replaces for well-formed lists)."""
-    import json as _json
-    import os
-    import tempfile
-
-    from .operators.tokenizer_io import (hf_tokenizer_encode,
-                                         import_hf_tokenizer_json)
+    from .operators.tokenizer_io import hf_tokenizer_encode
 
     # a WELL-FORMED file: the vocab seeds the full printable-ASCII
     # alphabet + the ▁ marker (the shape export_hf_tokenizer_json
@@ -6979,10 +6993,7 @@ def q160(spark, sf):
             "merges": [f"{l} {r}" for l, r in _Q160_MERGES],
         },
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q160_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q160")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", model)
     return (
@@ -7123,12 +7134,7 @@ def q162(spark, sf):
     position.  (Corpus words are far below
     max_input_chars_per_word=100, so that clamp is inert here —
     pinned by the local BERT-file tests instead.)"""
-    import json as _json
-    import os
-    import tempfile
-
-    from .operators.tokenizer_io import (hf_tokenizer_encode,
-                                         import_hf_tokenizer_json)
+    from .operators.tokenizer_io import hf_tokenizer_encode
 
     doc = {
         "version": "1.0", "truncation": None, "padding": None,
@@ -7141,10 +7147,7 @@ def q162(spark, sf):
                   "max_input_chars_per_word": 100,
                   "vocab": {p: i for i, p in enumerate(_Q162_VOCAB)}},
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q162_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q162")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", model)
     return (
@@ -7250,13 +7253,8 @@ def q163(spark, sf):
     single-char tail proves base-symbol passthrough.  Oracle: RE2
     replay of the Split + chained-replace merge discipline (see
     _q163_oracle)."""
-    import json as _json
-    import os
-    import tempfile
-
     from .operators.tokenizer_io import (_LLAMA3_SPLIT_REGEX,
-                                         hf_tokenizer_encode,
-                                         import_hf_tokenizer_json)
+                                         hf_tokenizer_encode)
 
     vocab_syms = (list("abcdefghijklmnopqrstuvwxyz0123456789!'")
                   + ["Ġ"] + [l + r for l, r in _Q163_MERGES]
@@ -7281,10 +7279,7 @@ def q163(spark, sf):
             "merges": [f"{l} {r}" for l, r in _Q163_MERGES],
         },
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q163_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q163")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", model)
     return (
@@ -7411,9 +7406,12 @@ def q164(spark, sf):
         lowercase=True, pre_tokenizer=ms)
     fd, path = tempfile.mkstemp(suffix=".json", prefix="q164_tok_")
     os.close(fd)
-    export_hf_tokenizer_json(path, unigram_model=model, lowercase=True,
-                             pre_tokenizer=ms)
-    m2 = import_hf_tokenizer_json(path)
+    try:
+        export_hf_tokenizer_json(path, unigram_model=model, lowercase=True,
+                                 pre_tokenizer=ms)
+        m2 = import_hf_tokenizer_json(path)
+    finally:
+        os.remove(path)
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", m2)
     return enc.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -7498,13 +7496,8 @@ def q165(spark, sf):
     `contains_special_tokens`' pure-codegen hit array.  Zero shuffles
     on the encode (one mapInPandas + one literal-array filter), one
     digest-row exchange."""
-    import json as _json
-    import os
-    import tempfile
-
     from .operators.tokenizer_io import (contains_special_tokens,
-                                         hf_tokenizer_encode,
-                                         import_hf_tokenizer_json)
+                                         hf_tokenizer_encode)
 
     doc = {
         "version": "1.0", "truncation": None, "padding": None,
@@ -7520,10 +7513,7 @@ def q165(spark, sf):
                   "vocab": {},
                   "merges": [f"{l} {r}" for l, r in _Q165_MERGES]},
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q165_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q165")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", model,
                               special_tokens="split")
@@ -7617,12 +7607,7 @@ def q166(spark, sf):
     zero shuffles on top of the zero-shuffle encode.  Oracle: q160's
     chained-replace merge replay, then a VALUES(piece, id) join in
     piece order."""
-    import json as _json
-    import os
-    import tempfile
-
-    from .operators.tokenizer_io import (hf_tokenizer_encode,
-                                         import_hf_tokenizer_json)
+    from .operators.tokenizer_io import hf_tokenizer_encode
 
     doc = {
         "version": "1.0", "truncation": None, "padding": None,
@@ -7640,10 +7625,7 @@ def q166(spark, sf):
             "merges": [f"{l} {r}" for l, r in _Q166_MERGES],
         },
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q166_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q166")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", model,
                               with_ids=True)
@@ -7690,13 +7672,8 @@ def q167(spark, sf):
     leading space, absent from this corpus and pinned in unit tests).
     Both passes are zero-shuffle vectorized closures riding the
     scan."""
-    import json as _json
-    import os
-    import tempfile
-
     from .operators.tokenizer_io import (hf_tokenizer_decode,
-                                         hf_tokenizer_encode,
-                                         import_hf_tokenizer_json)
+                                         hf_tokenizer_encode)
 
     doc = {
         "version": "1.0", "truncation": None, "padding": None,
@@ -7712,10 +7689,7 @@ def q167(spark, sf):
                   "byte_fallback": False, "ignore_merges": False,
                   "vocab": {}, "merges": []},
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q167_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q167")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(d.select("doc_id", "text"), "text", model)
     dec = hf_tokenizer_decode(enc, "tokens", model)
@@ -7867,12 +7841,7 @@ def q169(spark, sf):
     and compression (chars/token) — exact BIGINT sums, one shuffle on
     the language key on top of the zero-shuffle encode.  The numbers
     that decide which tokenizer a 100 TB corpus gets."""
-    import json as _json
-    import os
-    import tempfile
-
     from .operators.tokenizer_io import (hf_tokenizer_encode,
-                                         import_hf_tokenizer_json,
                                          tokenizer_fertility)
 
     doc = {
@@ -7891,10 +7860,7 @@ def q169(spark, sf):
             "merges": [f"{l} {r}" for l, r in _Q166_MERGES],
         },
     }
-    fd, path = tempfile.mkstemp(suffix=".json", prefix="q169_tok_")
-    with os.fdopen(fd, "w") as f:
-        _json.dump(doc, f)
-    model = import_hf_tokenizer_json(path)
+    model = _import_tokenizer_doc(doc, "q169")
     d = _t(spark, sf, "documents", "d").df
     enc = hf_tokenizer_encode(
         d.select("doc_id", "lang", "text"), "text", model)

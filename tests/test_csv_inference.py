@@ -104,6 +104,75 @@ def test_cast_pipeline(spark, tmp_path):
     assert row["version"] == "1.22.1"
 
 
+def _cast_expression_columns(col, inferred):
+    """The Column-API form of ``cast_expression`` it was first written in,
+    kept as the reference the SQL-text form must equal."""
+    from pyspark.sql import functions as F
+
+    c = F.trim(F.col(col))
+    nullified = F.when(
+        c.isNull() | (c == "") | F.lower(c).isin(
+            "null", "na", "n/a", "none", "-", "?", "nan"),
+        F.lit(None),
+    ).otherwise(c)
+    if inferred == "int":
+        return nullified.cast("bigint")
+    if inferred == "float_us":
+        return nullified.cast("double")
+    if inferred == "float_eu":
+        return F.replace(nullified, F.lit(","), F.lit(".")).cast("double")
+    if inferred == "thousands_us":
+        return F.replace(nullified, F.lit(","), F.lit("")).cast("double")
+    if inferred == "thousands_eu":
+        return F.replace(
+            F.replace(nullified, F.lit("."), F.lit("")), F.lit(","), F.lit(".")
+        ).cast("double")
+    if inferred == "percent":
+        stripped = F.replace(
+            F.replace(nullified, F.lit("%"), F.lit("")), F.lit(","), F.lit(".")
+        )
+        return F.trim(stripped).cast("double") / 100.0
+    if inferred == "currency":
+        stripped = F.regexp_replace(nullified, r"[€£¥₹$\s]", "")
+        return F.replace(stripped, F.lit(","), F.lit("")).cast("double")
+    if inferred == "boolean":
+        low = F.lower(nullified)
+        return (F.when(low.isin("true", "yes", "da"), F.lit(True))
+                .when(low.isin("false", "no", "ne"), F.lit(False))
+                .otherwise(F.lit(None).cast("boolean")))
+    return None
+
+
+def test_cast_expression_equals_column_reference(spark):
+    from elusion_spark.sources.csv_inference import cast_expression
+
+    nulls = [None, "", "  ", "NULL", " na ", "N/A", "none", "-", "?", "NaN"]
+    cases = {
+        "int": ["42", " -7 ", "+13"],
+        "float_us": ["1234.56", " -0.5", ".25"],
+        "float_eu": ["1234,56", " 0,5 "],
+        "thousands_us": ["1,234.56", "12,345"],
+        "thousands_eu": ["1.234,56", " 12.345 "],
+        "percent": ["15%", " 7,5 % ", "-2.5%"],
+        "currency": ["$1,234.50", "€ 12", "1 234 €", "£1\t234",
+                     "¥1\u000b2\r3\n4\f5"],
+        "boolean": ["yes", "DA", " Ne ", "false", "True", "maybe"],
+        "string": ["x"],
+        "date": ["2024-01-15"],
+    }
+    for inferred, values in cases.items():
+        df = spark.createDataFrame([(v,) for v in values + nulls], "`a b` STRING")
+        new, ref = (cast_expression("a b", inferred),
+                    _cast_expression_columns("a b", inferred))
+        if ref is None:
+            assert new is None, inferred
+            continue
+        got = df.select(new.alias("x"), ref.alias("y"))
+        assert got.schema["x"].dataType == got.schema["y"].dataType, inferred
+        rows = got.collect()
+        assert [r["x"] for r in rows] == [r["y"] for r in rows], inferred
+
+
 def test_delimiter_sniffing(tmp_path):
     from elusion_spark.sources.loaders import sniff_delimiter
 

@@ -939,6 +939,33 @@ def test_repetition_signals_crafted(spark):
     assert out[3]["dup_line_frac"] == 0.0
 
 
+def test_repetition_signals_plan_shape(spark, sf_dir):
+    """The 18 lead columns are added in one ``withColumns`` projection.
+    The physical plan must stay the one the earlier chain of ``withColumn``
+    calls produced (pinned below): one Window over the repartition's
+    clustering, two exchanges."""
+    from elusion_spark.operators.text import repetition_signals
+    from elusion_spark.sources.loaders import load_parquet
+
+    docs = load_parquet(f"{sf_dir}/documents.parquet", "d", spark).df
+    plan = repetition_signals(docs.select("doc_id", "text")) \
+        ._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName().strip())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    assert names == [
+        "HashAggregate", "HashAggregate", "Project", "SortAggregate",
+        "SortAggregate", "Sort", "HashAggregate", "HashAggregate", "Exchange",
+        "Union", "Filter", "Generate", "Project", "Window", "Sort",
+        "Exchange", "Project", "Generate", "Scan parquet", "Project",
+        "Generate", "Scan parquet"]
+
+
 # ---------------------------------------------------------------- semdedup
 
 def test_semantic_dedup_planted_copies(spark):

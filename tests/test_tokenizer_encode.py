@@ -1863,3 +1863,21 @@ def test_tokenizer_fertility_metrics(spark):
     whole = tokenizer_fertility(df, "text", "n_tokens").collect()
     assert len(whole) == 1 and whole[0]["tokens"] == 11
     assert whole[0]["words"] == 5
+
+
+@pytest.mark.parametrize("name", [
+    "q160_hf_import_encode", "q162_wordpiece_encode",
+    "q163_llama3_import_encode", "q164_sentencepiece_lifecycle",
+    "q165_special_token_split", "q166_token_ids", "q167_decode_roundtrip",
+    "q169_tokenizer_fertility"])
+def test_tokenizer_suite_builders_leave_no_temp_file(spark, sf_dir, tmp_path,
+                                                     monkeypatch, name):
+    """The published-tokenizer queries import through a temporary
+    ``tokenizer.json``; building one must not leave that file behind."""
+    import tempfile
+
+    from elusion_spark.suite import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    QUERIES[name](spark, sf_dir)
+    assert list(tmp_path.iterdir()) == []
